@@ -14,9 +14,11 @@ queries; tests assert the registry drains — see
 tests/test_cache_lifecycle.py). Releasing is always safe: an unpersisted
 DataFrame stays computable, it just loses the cache.
 
-Plan-shaped small relations (e.g. the hot-bucket stats broadcast in
-operators/pairs.py) deliberately do NOT persist at all — identical
-broadcast subtrees are collapsed by Spark's ReuseExchange rule instead.
+Small relations read by several broadcast branches are tracked too (e.g.
+the hot-bucket relation of ``operators.pairs.hot_buckets``): per-branch
+column pruning makes the broadcast subtrees non-identical, so Spark's
+ReuseExchange cannot collapse them, and the persist is what keeps their
+aggregation to one pass.
 
 Scope: the registry is process-global and assumes SERIAL query execution
 on the driver — one query is built, materialized, and released before the

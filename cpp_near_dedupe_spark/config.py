@@ -34,15 +34,16 @@ class DedupeConfig:
     order_col: str | None = None    # keep-first tiebreak (e.g. warc_ts); None -> id_col
 
     # scale knobs
-    shuffle_partitions: int = 32
-    max_records_per_batch: int = 2048   # Arrow batch size for the sketch UDF
-    # bucket size above which pair generation switches from exact all-pairs
-    # to capped all-pairs + star (see operators/pairs.py). 256 bounds a hot
+    # bucket size above which a bucket is "hot" (operators/pairs.py; each
+    # topology has one detector, operators.pairs.hot_buckets). Under
+    # all_pairs, hot buckets switch from exact all-pairs to capped
+    # all-pairs + star, sized by an exact aggregation: 256 bounds a hot
     # bucket at ~32k scored pairs; recall is protected by the 64-band
     # redundancy (a true near-dup pair collides in many buckets). Under
-    # chain_star the same value is the salting threshold AND the target
-    # sub-bucket size for over-cap windows (nothing is dropped there —
-    # the cap only bounds the per-task window partition)
+    # chain_star the same value is the salting threshold, compared with a
+    # 2% sample estimate of the bucket size, AND the target sub-bucket
+    # size for over-cap windows (nothing is dropped there — the cap only
+    # bounds the per-task window partition)
     hot_band_cap: int = 256
     # candidate topology within a bucket (operators/pairs.py):
     #   "chain_star" — each doc pairs with its id-order predecessor and the
@@ -57,11 +58,6 @@ class DedupeConfig:
     #                  maximal pairwise recall, O(h²) pairs per bucket.
     pair_topology: str = "chain_star"
     cc_max_iterations: int = 20         # large-star/small-star safety bound
-    # "auto": repartition the (id, text) projection up to min(shuffle
-    # partitions, cores) when the scan yields fewer splits (small-input
-    # fixup only); "never": trust the scan's partitioning (the at-scale
-    # default knob is spark.sql.files.maxPartitionBytes)
-    sketch_repartition: str = "auto"
 
     @property
     def band_size(self) -> int:
@@ -79,22 +75,13 @@ class DedupeConfig:
             raise ValueError("hash_bits must be 32 or 64")
         if self.band_key_mode not in ("content", "rbs"):
             raise ValueError("band_key_mode must be 'content' or 'rbs'")
-        if self.sketch_repartition not in ("auto", "never"):
-            raise ValueError("sketch_repartition must be 'auto' or 'never'")
         if self.pair_topology not in ("all_pairs", "chain_star"):
             raise ValueError("pair_topology must be 'all_pairs' or 'chain_star'")
     def fingerprint(self) -> str:
         """Stable hash of the semantics-bearing fields, used by the stage
         checkpoint manifest to decide whether a cached stage is reusable."""
-        sem = asdict(self)
-        # scale knobs don't change results -> excluded from the fingerprint
-        for k in (
-            "shuffle_partitions",
-            "max_records_per_batch",
-            "sketch_repartition",
-        ):
-            sem.pop(k)
-        return hashlib.sha256(json.dumps(sem, sort_keys=True).encode()).hexdigest()[:16]
+        sem = json.dumps(asdict(self), sort_keys=True)
+        return hashlib.sha256(sem.encode()).hexdigest()[:16]
 
 
 DEFAULT_CONFIG = DedupeConfig()

@@ -15,8 +15,9 @@ document bodies.
 
 Two implementations:
 
-* ``jaro``/``jaro_winkler`` — the scalar spec (per-pair greedy match
-  loop), kept as the readable definition and the property-test oracle.
+* ``jaro``/``jaro_winkler`` — the scalar spec (per-pair greedy first-fit
+  matching, linear time with one monotone pointer per byte value): the
+  property-test oracle, and the path for long outliers.
 * ``jaro_winkler_batch`` — the production kernel: the whole Arrow batch
   is padded into (n × Lmax) char-code matrices and the greedy match-window
   loop runs as Lmax·Wmax numpy passes over ALL pairs at once (batch-
@@ -40,32 +41,41 @@ def jaro(s1: str, s2: str) -> float:
     # operates on UTF-8 BYTES, not codepoints — matching DuckDB (and most
     # C implementations); for the ASCII identity strings JW is meant for,
     # the two definitions coincide
-    a = np.frombuffer(s1.encode("utf-8"), dtype=np.uint8)
-    b = np.frombuffer(s2.encode("utf-8"), dtype=np.uint8)
-    l1, l2 = a.size, b.size
+    a, b = s1.encode("utf-8"), s2.encode("utf-8")
+    l1, l2 = len(a), len(b)
     if l1 == 0 or l2 == 0:
         return 0.0
-    if l1 == l2 and np.array_equal(a, b):
+    if a == b:
         return 1.0
     window = max(0, max(l1, l2) // 2 - 1)
-    b_taken = np.zeros(l2, dtype=bool)
-    a_match = np.full(l1, -1, dtype=np.int64)
-    m = 0
-    for i in range(l1):
-        lo = max(0, i - window)
-        hi = min(l2, i + window + 1)
-        for j in range(lo, hi):
-            if not b_taken[j] and a[i] == b[j]:
-                b_taken[j] = True
-                a_match[i] = j
-                m += 1
-                break
+    # greedy first-fit matching — each a[i], in order, takes the first
+    # untaken b[j] == a[i] with |i - j| <= window — in O(l1 + l2): per byte
+    # value, b's positions in order plus ONE monotone pointer. Positions of
+    # a value are only ever taken at its pointer, and the window's lower
+    # bound only rises with i, so everything behind the pointer is taken
+    # or out of reach for good and the pointer never moves back.
+    positions: dict[int, list[int]] = {}
+    for j, c in enumerate(b):
+        positions.setdefault(c, []).append(j)
+    ptr = dict.fromkeys(positions, 0)
+    a_idx, b_idx = [], []
+    for i, c in enumerate(a):
+        pos = positions.get(c)
+        if pos is None:
+            continue
+        k = ptr[c]
+        while k < len(pos) and pos[k] < i - window:
+            k += 1
+        if k < len(pos) and pos[k] <= i + window:
+            a_idx.append(i)
+            b_idx.append(pos[k])
+            k += 1
+        ptr[c] = k
+    m = len(a_idx)
     if m == 0:
         return 0.0
     # transpositions: matched chars of a, in order, vs matched chars of b
-    a_chars = a[a_match >= 0]
-    b_chars = b[np.sort(a_match[a_match >= 0])]
-    t = int(np.count_nonzero(a_chars != b_chars)) // 2
+    t = sum(a[i] != b[j] for i, j in zip(a_idx, sorted(b_idx))) // 2
     return (m / l1 + m / l2 + (m - t) / m) / 3.0
 
 

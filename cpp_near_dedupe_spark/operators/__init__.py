@@ -7,7 +7,7 @@ ngram, simhash, embedding_ann, multimodal.
 
 from .sketch_op import sketch_documents
 from .blocking import explode_bands
-from .pairs import candidate_pairs, hot_bucket_stats
+from .pairs import candidate_pairs
 from .scoring import score_pairs, duplicate_edges
 from .clustering import connected_components
 from .resolve import resolve_clusters, duplicates, dedupe_output
@@ -25,7 +25,7 @@ from .embedding_ann import brute_force_topk, lsh_topk, hyperplane_buckets
 from .multimodal import binary_features, with_binary_payload
 
 __all__ = [
-    "sketch_documents", "explode_bands", "candidate_pairs", "hot_bucket_stats",
+    "sketch_documents", "explode_bands", "candidate_pairs",
     "score_pairs", "duplicate_edges", "connected_components",
     "resolve_clusters", "duplicates", "dedupe_output",
     "exact_dedupe", "exact_dupe_groups", "exact_dedupe_output",

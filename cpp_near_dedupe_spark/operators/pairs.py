@@ -9,24 +9,33 @@ flag trick becomes a plain distinct *before* the expensive signature join.
 
 Scale design (north_rule: explicit skew handling). A "hot band" — one
 bucket holding h documents (boilerplate/template pages at Common-Crawl
-scale) — would make the naive self-join emit h·(h−1)/2 pairs. We bound
-this without silently losing the cluster:
+scale) — would make the naive self-join emit h·(h−1)/2 pairs. Each
+topology bounds this without silently losing the cluster, and each finds
+its over-cap buckets with exactly ONE detector, ``hot_buckets`` — the
+same one whether or not the pipeline runs with a checkpoint store, so a
+given bands table always yields one pair set:
 
-* buckets with ≤ ``hot_band_cap`` docs: exact all-pairs (the normal path;
-  AQE skew-join splits oversized shuffle partitions underneath).
-* hotter buckets: all-pairs among a deterministic hash-selected "head"
-  of ~cap docs, plus a *star* — every doc paired with the bucket's
-  minimum doc — so the bucket stays one connected candidate group at
-  O(h) extra pairs instead of O(h²). Every emitted pair is still
-  Jaccard-verified downstream, so the star cannot cause false merges; it
-  can only miss pairs of docs that are each dissimilar to the star
-  center but similar to each other *and* collide in no other band. The
-  count of star-routed docs is reported in the stage metrics (no silent
+* ``chain_star`` (default, ``_chain_star_pairs``): O(h) chain+star pairs
+  per bucket anyway; over-cap buckets are only SALTED into ~cap-row window
+  partitions. Routing only, so a 2% value-filtered sample estimates the
+  bucket sizes — no full-table aggregation.
+* ``all_pairs`` (``capped_star_pairs``): buckets with ≤ ``hot_band_cap``
+  docs get exact all-pairs (AQE skew-join splits oversized shuffle
+  partitions underneath); hotter buckets get all-pairs among a
+  deterministic hash-selected "head" of ~cap docs, plus a *star* — every
+  doc paired with the bucket's minimum doc — so the bucket stays one
+  connected candidate group at O(h) extra pairs instead of O(h²). The
+  head and star depend on the exact bucket size and minimum, so this
+  topology's detector is the exact hash aggregation. Every emitted pair
+  is still Jaccard-verified downstream, so the star cannot cause false
+  merges; it can only miss pairs of docs that are each dissimilar to the
+  star center but similar to each other *and* collide in no other band.
+  The pipeline logs the detector's buckets to the stage store (no silent
   truncation).
 
-The hot path is WINDOWLESS by design: bucket statistics come from a
-hash aggregation (map-side combined, no sort), the head is selected by a
-value filter, and the star center rides the broadcast join — so NO task
+The all_pairs hot path is WINDOWLESS by design: bucket statistics come
+from a hash aggregation (map-side combined, no sort), the head is
+selected by a value filter, and the star center rides the broadcast join — so NO task
 ever sorts a degenerate bucket. An earlier formulation ranked hot
 buckets with ``row_number() over (partition by band_key order by id)``;
 AQE cannot split window partitions, so the guaranteed-hot classes at web
@@ -47,6 +56,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import track
 from ..config import DedupeConfig
 
 # Portable head-selection hash (see module docstring). (P-1)*K ≈ 2.65e18
@@ -79,20 +89,59 @@ def portable_salt_sql(id_sql: str, n_salts_sql: str) -> str:
     )
 
 
-def bucket_stats(rows: DataFrame, keys: list[str], id_col: str) -> DataFrame:
-    """(keys..., bucket_size, bucket_min) hash aggregation — map-side
-    combined, no sort. Computed ONCE per run and shared by the pair
-    generators and the hot-bucket metrics (it is a full pass over the
-    hottest table)."""
-    return rows.groupBy(*keys).agg(
-        F.count("*").alias("bucket_size"), F.min(id_col).alias("bucket_min")
+def over_cap_buckets(
+    rows: DataFrame, keys: list[str], id_col: str, cap: int
+) -> DataFrame:
+    """EXACT (keys..., bucket_size, bucket_min) of every bucket holding
+    more than ``cap`` rows: one hash aggregation (map-side combined, no
+    sort) over the whole table, filtered down to the (tiny) hot list and
+    persisted, so a second call over the same ``rows`` reads the cache
+    (Spark's cache lookup matches the identical plan)."""
+    return track(
+        rows.groupBy(*keys)
+        .agg(F.count("*").alias("bucket_size"), F.min(id_col).alias("bucket_min"))
+        .filter(F.col("bucket_size") > cap)
     )
 
 
-def bucket_sizes(bands: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Back-compat wrapper: per-band-key stats for the default band table
-    shape (see ``bucket_stats``)."""
-    return bucket_stats(bands, ["band_key"], id_col)
+# chain_star hot detection samples 1/HOT_SAMPLE_MOD of the band rows
+HOT_SAMPLE_MOD = 50
+
+
+def hot_buckets(bands: DataFrame, cfg: DedupeConfig) -> DataFrame:
+    """The over-cap buckets ``candidate_pairs`` routes by under
+    ``cfg.pair_topology`` — the ONE hot-bucket detector per topology,
+    shared by pair generation and the pipeline's hot-bucket lineage.
+    Columns (band_key, bucket_size, ...); ``bucket_size`` is the
+    topology's routing figure:
+
+    * all_pairs: exact ``over_cap_buckets`` — its head hash and star
+      center are part of the verified pair-set definition (mirrored by the
+      DuckDB oracle), so they need exact sizes and minima.
+    * chain_star: an estimate from a deterministic 2% VALUE-filtered
+      sample (``xxhash64(id, band_key) % 50 == 0``, scaled by 50), never
+      ``DataFrame.sample``, so partition layout cannot flip a decision.
+      Salting is routing, not semantics (salting any bucket is correct;
+      leaving a mildly-over-cap bucket unsalted costs one window task of
+      that size), so no exact full-table aggregation is needed: a 10⁴-row
+      bucket shows ~200 sampled rows (P[miss] ≈ 0); only buckets within a
+      few × of the cap are detected noisily, and those don't need salting.
+
+    Both are persisted through the session cache registry, so a second
+    call over the same ``bands`` (the lineage append after the pairs stage
+    commits) reads the cache instead of re-aggregating.
+    """
+    id_col, cap = cfg.id_col, cfg.hot_band_cap
+    if cfg.pair_topology == "all_pairs":
+        return over_cap_buckets(bands, ["band_key"], id_col, cap)
+    return track(
+        bands.filter(
+            F.pmod(F.xxhash64(F.col(id_col), F.col("band_key")), HOT_SAMPLE_MOD) == 0
+        )
+        .groupBy("band_key")
+        .agg((F.count("*") * HOT_SAMPLE_MOD).alias("bucket_size"))
+        .filter(F.col("bucket_size") > cap)
+    )
 
 
 def capped_star_pairs(
@@ -100,7 +149,6 @@ def capped_star_pairs(
     keys: list[str],
     id_col: str,
     cap: int,
-    stats: DataFrame | None = None,
 ) -> DataFrame:
     """Shared windowless capped+star pair topology over bucketed rows.
 
@@ -113,28 +161,18 @@ def capped_star_pairs(
       (bucket_min, doc) star edges for EVERY other doc — O(h) pairs, one
       connected group, nothing dropped.
 
-    Physical shape: one hash aggregation for the stats; the (tiny)
-    hot-stats relation is persisted through the session cache registry and
-    broadcast to every branch, so the aggregation over the big table runs
-    ONCE (per-branch column pruning makes the broadcast subtrees
-    non-identical, so Spark's ReuseExchange cannot collapse them — the
-    cache is what dedupes the underlying scan); equi-joins are bounded at
-    cap²/2 pairs per bucket. No window, no sort, no driver action. The
-    star center (``bucket_min``) rides the broadcast join instead of a
-    rank pass.
-
-    ``stats``: optionally pass a precomputed/persisted ``bucket_stats``
-    DataFrame so callers that also log hot-bucket metrics don't pay for
-    the aggregation twice (then nothing extra is persisted here).
+    Physical shape: one hash aggregation for the exact stats
+    (``over_cap_buckets``); the (tiny) hot-stats relation is persisted
+    through the session cache registry and broadcast to every branch, so
+    the aggregation over the big table runs ONCE (per-branch column
+    pruning makes the broadcast subtrees non-identical, so Spark's
+    ReuseExchange cannot collapse them — the cache is what dedupes the
+    underlying scan); equi-joins are bounded at cap²/2 pairs per bucket.
+    No window, no sort, no driver action. The star center
+    (``bucket_min``) rides the broadcast join instead of a rank pass.
     """
-    from ..cache import track
-
-    if stats is None:
-        hot = track(bucket_stats(rows, keys, id_col).filter(F.col("bucket_size") > cap))
-    else:
-        hot = stats.filter(F.col("bucket_size") > cap)
+    hot = over_cap_buckets(rows, keys, id_col, cap)
     aug = rows.select(*keys, id_col).join(F.broadcast(hot), list(keys), "left")
-
 
     cold = aug.filter(F.col("bucket_size").isNull())
     cold_pairs = (
@@ -166,33 +204,25 @@ def capped_star_pairs(
     )
 
 
-def candidate_pairs(
-    bands: DataFrame, cfg: DedupeConfig, sizes: DataFrame | None = None
-) -> DataFrame:
+def candidate_pairs(bands: DataFrame, cfg: DedupeConfig) -> DataFrame:
     """(id, band_id, band_key) → distinct (a, b) with a < b.
 
-    Physical shape: bucket stats come from a hash aggregation (map-side
-    combine, no sort); hot buckets — found with a broadcast join against
-    the (tiny) hot-stats list — take the windowless capped+star route
-    (``capped_star_pairs``). The cold path is a plain self-equi-join that
-    AQE's skew-join splitting handles.
-
-    ``sizes``: optionally pass a precomputed/persisted ``bucket_stats``
-    DataFrame so callers that also log hot-bucket stats don't pay for the
-    aggregation twice.
-
-    ``cfg.pair_topology == "chain_star"`` switches to the linear-cost
-    topology (see ``_chain_star_pairs``).
+    Hot buckets come from ``hot_buckets`` — the one detector per topology,
+    whatever the caller (checkpointed pipeline, in-memory pipeline,
+    incremental, SQL mode), so the same bands always yield the same pairs.
+    ``cfg.pair_topology == "chain_star"`` (the default) is the linear-cost
+    topology (see ``_chain_star_pairs``); "all_pairs" takes the windowless
+    capped+star route (``capped_star_pairs``), whose cold path is a plain
+    self-equi-join that AQE's skew-join splitting handles.
     """
     if cfg.pair_topology == "chain_star":
-        return _chain_star_pairs(bands, cfg, sizes=sizes)
+        return _chain_star_pairs(bands, cfg)
     # the band key is already namespaced by band index (computed with
     # seed = band_id, functions/bands.py), so joining on the single long
     # key is equivalent to the composite join w.p. 1 - 2^-64 per bucket —
-    # and shuffles ~30% fewer bytes through the hottest stage
-    return capped_star_pairs(
-        bands, ["band_key"], cfg.id_col, cfg.hot_band_cap, stats=sizes
-    )
+    # and shuffles ~30% fewer bytes through the hottest stage. Its hot
+    # list is hot_buckets(bands, cfg) by construction: same aggregation.
+    return capped_star_pairs(bands, ["band_key"], cfg.id_col, cfg.hot_band_cap)
 
 
 def _chain_star_window(bands: DataFrame, id_col: str, part_cols: list[str]) -> DataFrame:
@@ -232,9 +262,7 @@ def _chain_star_window(bands: DataFrame, id_col: str, part_cols: list[str]) -> D
     )
 
 
-def _chain_star_pairs(
-    bands: DataFrame, cfg: DedupeConfig, sizes: DataFrame | None = None
-) -> DataFrame:
+def _chain_star_pairs(bands: DataFrame, cfg: DedupeConfig) -> DataFrame:
     """Linear-cost candidate topology: within each bucket (docs sorted by
     id) emit (predecessor, doc) chain pairs plus (bucket_min, doc) star
     pairs — 2 candidates per band row instead of h²/2 per bucket.
@@ -265,13 +293,12 @@ def _chain_star_pairs(
     candidate group — still O(h) pairs total, but no window partition
     exceeds ~cap rows. Nothing is capped or dropped.
 
-    Hot buckets are found from a deterministic 2% VALUE-filtered sample of
-    the bands table (``xxhash64(id, band_key) % 50 == 0`` — layout- and
-    parallelism-independent, so the same input always salts the same
-    buckets) or from the caller's exact ``sizes`` aggregate when one was
-    already computed for metrics. The (tiny) hot-key relation is persisted
-    through the session cache registry so the sampled aggregation runs
-    once across the broadcast branches.
+    Hot buckets are the sampled estimate of ``hot_buckets`` — the only
+    chain_star detector, with or without a checkpoint store, so a
+    checkpointed run and an in-memory run salt the same buckets and emit
+    the same pairs. The (tiny) hot-key relation is persisted through the
+    session cache registry so the sampled aggregation runs once across the
+    broadcast branches and the pipeline's lineage append.
 
     Adaptive plan choice (one tiny driver action over the cached hot-key
     aggregate — the AQE-style runtime decision Spark cannot make for
@@ -283,36 +310,9 @@ def _chain_star_pairs(
     sf0.1: always-salted 1.85 s vs bypassed ~1.4 s on a corpus with no
     hot buckets.
     """
-    from ..cache import track
-
     id_col = cfg.id_col
     cap = cfg.hot_band_cap
-    if sizes is not None:
-        hot_keys = sizes.filter(F.col("bucket_size") > cap).select(
-            "band_key", "bucket_size"
-        )
-    else:
-        # Statistical hot detection: an exact bucket_stats pass is a full
-        # hash aggregation over the hottest table in the pipeline, and it
-        # exists only to find buckets worth salting — a ROUTING decision,
-        # not a semantic one (salting any bucket is always correct;
-        # leaving a mildly-over-cap bucket unsalted costs one window task
-        # of that size, which is harmless). A 2% sample finds every bucket
-        # that actually matters: a 10⁴-row bucket shows ~200 sampled rows
-        # (P[miss] ≈ 0), a 10⁷-row one ~2·10⁵; only buckets within a few ×
-        # of the cap are detected noisily, and those are exactly the ones
-        # that don't need salting. ~50× less aggregation input than the
-        # exact pass. The sample is a VALUE filter, not `DataFrame.sample`
-        # — partition-layout changes cannot flip a routing decision.
-        sample_mod = 50  # 2%
-        hot_keys = track(
-            bands.filter(
-                F.pmod(F.xxhash64(F.col(id_col), F.col("band_key")), sample_mod) == 0
-            )
-            .groupBy("band_key")
-            .agg((F.count("*") * sample_mod).alias("bucket_size"))
-            .filter(F.col("bucket_size") > cap)
-        )
+    hot_keys = hot_buckets(bands, cfg)
 
     # adaptive bypass: nothing hot -> plain per-bucket window (see
     # docstring). The count materializes the cached hot_keys, so the hot
@@ -358,13 +358,3 @@ def _chain_star_pairs(
 
     return pairs.unionByName(links).dropDuplicates(["a", "b"])
 
-
-def hot_bucket_stats(
-    bands: DataFrame, cfg: DedupeConfig, sizes: DataFrame | None = None
-) -> DataFrame:
-    """Per-bucket sizes above the cap — logged to the metrics table so
-    star-routing is observable, never silent. Pass the shared ``sizes``
-    aggregate to avoid a second full pass over the bands table."""
-    if sizes is None:
-        sizes = bucket_sizes(bands, cfg.id_col)
-    return sizes.filter(F.col("bucket_size") > cfg.hot_band_cap)

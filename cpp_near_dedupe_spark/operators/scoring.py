@@ -12,7 +12,8 @@ doc. Both joins shuffle on a doc id — co-partitioned by Catalyst; at
 cluster scale the signatures table should be bucketed by id so the join
 avoids re-shuffling the small side each run. The score UDF sees only
 (signature_a, signature_b) columns — ~4KB per pair max — with Arrow batch
-size bounded by ``max_records_per_batch``.
+size bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch`` (set in
+``session.build_session``).
 """
 
 from __future__ import annotations

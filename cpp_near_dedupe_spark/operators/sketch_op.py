@@ -52,16 +52,12 @@ def sketch_documents(df: DataFrame, cfg: DedupeConfig) -> DataFrame:
     # already yields thousands of splits and the gate never fires, so the
     # full (id, text) shuffle is strictly a small-data fixup; the at-scale
     # lever for split sizing is spark.sql.files.maxPartitionBytes.
-    # (cfg.sketch_repartition="never" disables the probe entirely for
-    # callers that manage partitioning themselves.)
-    if cfg.sketch_repartition != "never":
-        sc = df.sparkSession.sparkContext
-        target = min(
-            int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")),
-            sc.defaultParallelism,
-        )
-        if projected.rdd.getNumPartitions() < target:
-            projected = projected.repartition(target)
+    target = min(
+        int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")),
+        df.sparkSession.sparkContext.defaultParallelism,
+    )
+    if projected.rdd.getNumPartitions() < target:
+        projected = projected.repartition(target)
     return projected.mapInPandas(
         run, schema=f"{id_col} long, sig_len int, signature array<long>"
     )

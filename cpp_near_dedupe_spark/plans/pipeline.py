@@ -13,7 +13,13 @@ deployment each stage writes an Iceberg table and the manifest is the
 Iceberg snapshot lineage; this environment has no Iceberg runtime jars, so
 the store abstracts only what we need (write/read/exists). Per-stage,
 per-partition row counters are appended to ``_metrics`` (lineage
-requirement), including hot-band star-routing counts — no silent drops.
+requirement). Once the pairs stage has committed, the over-cap buckets
+its topology routed by are appended to ``_metrics_hot_buckets`` — read
+from the same detector (``operators.pairs.hot_buckets``) that pair
+generation used, so with or without a store the pair set is the same and
+the lineage shows what was routed (no silent drops). Its ``bucket_size``
+is the topology's routing figure: exact under all_pairs, the 2% sample
+estimate under chain_star.
 """
 
 from __future__ import annotations
@@ -30,7 +36,7 @@ from ..config import DedupeConfig
 from ..operators.sketch_op import sketch_documents
 from ..operators.blocking import explode_bands
 from ..cache import track
-from ..operators.pairs import bucket_stats, candidate_pairs, hot_bucket_stats
+from ..operators.pairs import candidate_pairs, hot_buckets
 from ..operators.scoring import score_pairs
 from ..operators.clustering import connected_components
 from ..operators.resolve import resolve_clusters
@@ -39,8 +45,10 @@ STAGES = ("signatures", "sig_reps", "bands", "pairs", "edges", "clusters", "reso
 
 # bump when the stage DAG or a stage's semantics change, so stale
 # checkpoints from older layouts can never be resumed into a new run
-# (v4: all_pairs hot-bucket routing became windowless hash-head+star)
-PIPELINE_VERSION = 4
+# (v4: all_pairs hot-bucket routing became windowless hash-head+star;
+# v5: chain_star salts from its sampled hot-bucket estimate with or
+# without a store — v4 store checkpoints hold exact-salted pairs)
+PIPELINE_VERSION = 5
 
 
 class CheckpointStore:
@@ -105,6 +113,15 @@ class CheckpointStore:
                 os.path.join(self.root, "_metrics")
             )
         return int(pdf["rows"].sum()) if len(pdf) else 0
+
+    def append_hot_buckets(self, hot: DataFrame) -> None:
+        """Hot-bucket lineage: the over-cap buckets the pairs stage routed
+        by. Separate directory from the per-partition counters — the two
+        writers have different schemas and a mixed parquet dir would be
+        read back nondeterministically (schema sampled per-footer)."""
+        hot.select("band_key", "bucket_size").withColumn(
+            "stage", F.lit("pairs_hot_buckets")
+        ).write.mode("append").parquet(os.path.join(self.root, "_metrics_hot_buckets"))
 
 
 def signature_reps(signatures: DataFrame, cfg: DedupeConfig) -> DataFrame:
@@ -180,15 +197,15 @@ def run_pipeline(
     # measured slower. bands has one consumer under chain_star (the
     # window) but three under all_pairs (cold/hot/overflow branches);
     # clusters feeds resolve's clustered-join, reps aggregation AND the
-    # singleton anti-join (3 consumers). bands feeds the bucket_sizes
-    # aggregation plus the cold/hot branches under BOTH topologies.
+    # singleton anti-join (3 consumers). bands feeds the hot-bucket
+    # detector plus the cold/hot branches under BOTH topologies.
     # "resolved" is NOT here (r6): every caller consumes it exactly once
     # (audited: entry/queries/dedupe_output all reference it in a single
     # plan branch), so persisting it only added a cache write of the
     # widest per-doc relation.
     multi_consumer = {"signatures", "sig_reps", "bands", "clusters"}
 
-    def stage(name: str, make) -> DataFrame:
+    def stage(name: str, make, after_commit=None) -> DataFrame:
         if store is None:
             out = make()
             if name in multi_consumer:
@@ -198,7 +215,10 @@ def run_pipeline(
             return out
         if store.is_complete(name, fp):
             return store.read(name)
-        return store.write(name, make(), fp)
+        out = store.write(name, make(), fp)
+        if after_commit is not None:
+            after_commit()
+        return out
 
     id_col = cfg.id_col
     signatures = stage("signatures", lambda: sketch_documents(docs, cfg))
@@ -221,31 +241,17 @@ def run_pipeline(
     if stop_after == "bands":
         return PipelineResult(signatures, bands, None, None, None, None)
 
-    def make_pairs() -> DataFrame:
-        # Exact bucket sizes are a full hash aggregation over the hottest
-        # table; compute them only when something needs EXACT numbers: the
-        # hot-bucket metrics (checkpointed runs) or all_pairs' cap routing
-        # (part of its verified pair-set definition). chain_star's salting
-        # is a routing-only decision, so without a checkpoint it detects
-        # hot buckets from a 2% sample inside _chain_star_pairs instead —
-        # the shared aggregate is then skipped entirely.
-        sizes = None
-        if store is not None or cfg.pair_topology == "all_pairs":
-            sizes = track(bucket_stats(bands, ["band_key"], cfg.id_col))
-        if store is not None:
-            # observability: record over-cap buckets routed through the star.
-            # Separate directory from the per-partition counters — the two
-            # writers have different schemas and a mixed parquet dir would
-            # be read back nondeterministically (schema sampled per-footer).
-            stats = hot_bucket_stats(bands, cfg, sizes=sizes).withColumn(
-                "stage", F.lit("pairs_hot_buckets")
-            )
-            stats.write.mode("append").parquet(
-                os.path.join(store.root, "_metrics_hot_buckets")
-            )
-        return candidate_pairs(bands, cfg, sizes=sizes)
-
-    pairs = stage("pairs", make_pairs)
+    # observability: record the over-cap buckets pair generation routed
+    # by, once per computed pairs stage and only AFTER it has committed —
+    # a crash before the commit leaves no lineage behind to double-count
+    # on resume (a crash between the commit and the append loses that
+    # run's lineage instead). hot_buckets is the same (cached) detector
+    # candidate_pairs used, so this reads the cache, not the bands table.
+    pairs = stage(
+        "pairs",
+        lambda: candidate_pairs(bands, cfg),
+        after_commit=lambda: store.append_hot_buckets(hot_buckets(bands, cfg)),
+    )
     if stop_after == "pairs":
         return PipelineResult(signatures, bands, pairs, None, None, None)
 

@@ -16,7 +16,6 @@ def build_session(
     app_name: str = "cpp-near-dedupe-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    max_records_per_batch: int = 2048,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     if master is None:
@@ -32,7 +31,7 @@ def build_session(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(max_records_per_batch))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # dedupe pair explosion benefits from compact shuffles

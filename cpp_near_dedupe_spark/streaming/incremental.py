@@ -306,29 +306,13 @@ def dedupe_increment(
     # 2. score batch survivors against the retained state (reference
     # semantics: incoming doc vs retained uniques sharing >=1 band)
     if state.exists():
-        sigs_kept = sigs_new.join(kept_ids, id_col, "left_semi")
-        bands_kept = bands_new.join(kept_ids, id_col, "left_semi")
-        cand = (
-            bands_kept.select("band_id", "band_key", F.col(id_col).alias("a"))
-            .join(
-                state.bands().select("band_id", "band_key", F.col(id_col).alias("b")),
-                ["band_id", "band_key"],
-            )
-            # a != b: the state dir is re-listed on every (re)computation of
-            # the returned DataFrame, so after append() it contains this
-            # batch's own survivors — without the guard a lazy consumer
-            # collecting post-append would match each survivor against
-            # itself (J=1.0) and drop it. Survivor-vs-survivor pairs are
-            # harmless: they already passed within-batch dedupe (J < thresh).
-            .filter(F.col("a") != F.col("b"))
-            .select("a", "b")
-            .distinct()
+        dup_ids = _state_matches(
+            sigs_new.join(kept_ids, id_col, "left_semi"),
+            bands_new.join(kept_ids, id_col, "left_semi"),
+            state,
+            cfg,
+            score_fn,
         )
-        all_sigs = sigs_kept.unionByName(state.signatures().select(sigs_kept.columns))
-        matches = score_fn(cand, all_sigs, cfg).filter(
-            F.col("jaccard") >= F.lit(cfg.threshold)
-        )
-        dup_ids = matches.select(F.col("a").alias(id_col)).distinct()
         # final survivors = within-batch keepers minus state matches; one
         # slim persisted id relation shared by the appends and the return
         survivor_ids = track(kept_ids.join(dup_ids, id_col, "left_anti"))
@@ -341,6 +325,40 @@ def dedupe_increment(
         bands_new.join(survivor_ids, id_col, "left_semi"),
     )
     return new_docs.join(survivor_ids, id_col, "left_semi")
+
+
+def _state_matches(
+    sigs: DataFrame,
+    bands: DataFrame,
+    state: SignatureState,
+    cfg: DedupeConfig,
+    score_fn,
+) -> DataFrame:
+    """Distinct ids of the batch docs in ``sigs``/``bands`` that match a
+    retained state doc (reference semantics: incoming doc vs retained
+    uniques sharing >= 1 band, J >= threshold). Shared by both modes."""
+    id_col = cfg.id_col
+    cand = (
+        bands.select("band_id", "band_key", F.col(id_col).alias("a"))
+        .join(
+            state.bands().select("band_id", "band_key", F.col(id_col).alias("b")),
+            ["band_id", "band_key"],
+        )
+        # a != b: the state dir is re-listed on every (re)computation of
+        # the returned DataFrame, so after append() it contains this
+        # batch's own survivors — without the guard a lazy consumer
+        # collecting post-append would match each survivor against itself
+        # (J=1.0) and drop it. Survivor-vs-survivor pairs are harmless:
+        # they already passed within-batch dedupe (J < thresh).
+        .filter(F.col("a") != F.col("b"))
+        .select("a", "b")
+        .distinct()
+    )
+    all_sigs = sigs.unionByName(state.signatures().select(sigs.columns))
+    matches = score_fn(cand, all_sigs, cfg).filter(
+        F.col("jaccard") >= F.lit(cfg.threshold)
+    )
+    return matches.select(F.col("a").alias(id_col)).distinct()
 
 
 def _dedupe_increment_strict(
@@ -362,31 +380,13 @@ def _dedupe_increment_strict(
 
     live_docs = new_docs
     if state.exists():
-        cand = (
-            bands_new.select("band_id", "band_key", F.col(id_col).alias("a"))
-            .join(
-                state.bands().select("band_id", "band_key", F.col(id_col).alias("b")),
-                ["band_id", "band_key"],
-            )
-            # same lazy-recompute guard as the default path: after append()
-            # the state dir contains this batch's own survivors
-            .filter(F.col("a") != F.col("b"))
-            .select("a", "b")
-            .distinct()
-        )
-        all_sigs = sigs_new.unionByName(
-            state.signatures().select(sigs_new.columns)
-        )
-        matches = score_fn(cand, all_sigs, cfg).filter(
-            F.col("jaccard") >= F.lit(cfg.threshold)
-        )
         # slim persisted id relation: the state-dropped set feeds the
         # live-docs anti-join whose result is consumed twice below (band
         # restriction + the greedy doc list) — unpersisted, the whole
         # state-scoring join re-ran per consumer (r6, same rationale as
         # the default path's survivor-id persist)
         state_dropped = track(
-            matches.select(F.col("a").alias(id_col)).distinct()
+            _state_matches(sigs_new, bands_new, state, cfg, score_fn)
         )
         live_docs = new_docs.join(state_dropped, id_col, "left_anti")
 

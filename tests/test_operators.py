@@ -246,18 +246,22 @@ def test_greedy_component_cache_drains(spark):
     from cpp_near_dedupe_spark.operators.greedy import greedy_resolve
 
     release_all()
-    docs = spark.createDataFrame(
-        pd.DataFrame({"doc_id": range(6)}), "doc_id long"
-    )
-    edges = spark.createDataFrame(
-        pd.DataFrame({"a": [0, 1], "b": [1, 2]}), "a long, b long"
-    )
-    out = greedy_resolve(docs, edges, CFG)
-    n = out.count()
-    assert n == 6
-    assert tracked_count() >= 1  # the tagged persist is registered
-    release_all()
-    assert tracked_count() == 0
+    try:
+        docs = spark.createDataFrame(
+            pd.DataFrame({"doc_id": range(6)}), "doc_id long"
+        )
+        edges = spark.createDataFrame(
+            pd.DataFrame({"a": [0, 1], "b": [1, 2]}), "a long, b long"
+        )
+        out = greedy_resolve(docs, edges, CFG)
+        n = out.count()
+        assert n == 6
+        assert tracked_count() >= 1  # the tagged persist is registered
+        release_all()
+        assert tracked_count() == 0
+    finally:
+        # a failed assert must not leak the registry into later tests
+        release_all()
 
 
 def test_resolve_and_output(spark):

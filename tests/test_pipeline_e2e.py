@@ -171,6 +171,72 @@ def test_resume_from_checkpoint(spark, pages_600, tmp_path):
     assert os.path.getmtime(os.path.join(ckpt, "signatures", "_SUCCESS")) != sig_mtime
 
 
+def _pair_set(res):
+    return {(r.a, r.b) for r in res.pairs.select("a", "b").collect()}
+
+
+def test_checkpointed_and_in_memory_pairs_agree(spark, pages_600, tmp_path):
+    """One hot-bucket detector with or without a store: a cap small enough
+    that dupe-family buckets go over it must not make a checkpointed run
+    salt differently from an in-memory one."""
+    cfg = DedupeConfig(
+        id_col="doc_id", text_col="text", order_col="warc_ts", hot_band_cap=4
+    )
+    docs = with_doc_id(
+        spark.createDataFrame(pages_600[["url", "warc_ts", "html", "text", "lang"]]), cfg
+    )
+    stored = run_pipeline(
+        spark, docs, cfg, checkpoint_dir=str(tmp_path / "ckpt"), stop_after="pairs"
+    )
+    fresh = run_pipeline(spark, docs, cfg, stop_after="pairs")
+    got, want = _pair_set(stored), _pair_set(fresh)
+    assert len(want) > 0
+    assert got == want
+
+
+def test_hot_bucket_lineage_written_once_after_crash(spark, pages_600, tmp_path, monkeypatch):
+    """A crash after pair generation but before the pairs stage commits,
+    then a resume, leaves exactly one run's hot-bucket lineage."""
+    import os
+
+    from cpp_near_dedupe_spark.plans.pipeline import CheckpointStore
+
+    cfg = DedupeConfig(
+        id_col="doc_id", text_col="text", order_col="warc_ts", hot_band_cap=4
+    )
+    docs = with_doc_id(
+        spark.createDataFrame(pages_600.head(150)[["url", "warc_ts", "html", "text", "lang"]]),
+        cfg,
+    )
+
+    def lineage(ckpt):
+        df = spark.read.parquet(os.path.join(ckpt, "_metrics_hot_buckets"))
+        return sorted((r.band_key, r.bucket_size) for r in df.collect())
+
+    clean = str(tmp_path / "clean")
+    run_pipeline(spark, docs, cfg, checkpoint_dir=clean, stop_after="pairs")
+    want = lineage(clean)
+    assert want  # the small cap puts buckets over it
+
+    crashed = str(tmp_path / "crashed")
+    write = CheckpointStore.write
+
+    def crash_on_pairs(self, stage, df, fingerprint):
+        if stage == "pairs":
+            raise RuntimeError("injected crash before the pairs commit")
+        return write(self, stage, df, fingerprint)
+
+    monkeypatch.setattr(CheckpointStore, "write", crash_on_pairs)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_pipeline(spark, docs, cfg, checkpoint_dir=crashed, stop_after="pairs")
+    monkeypatch.setattr(CheckpointStore, "write", write)
+    run_pipeline(spark, docs, cfg, checkpoint_dir=crashed, stop_after="pairs")
+    assert lineage(crashed) == want
+    # a rerun resumes the committed pairs stage and appends nothing
+    run_pipeline(spark, docs, cfg, checkpoint_dir=crashed, stop_after="pairs")
+    assert lineage(crashed) == want
+
+
 def test_threshold_monotonicity(spark, pages_600):
     # higher threshold -> fewer or equal duplicate edges
     sub = pages_600.head(200)

@@ -277,21 +277,27 @@ def test_capped_star_head_is_proper_hash_subset(spark):
         assert got == expected  # identical at BOTH parallelism levels
 
 
-def test_capped_star_precomputed_stats_path(spark):
-    """The caller-supplied stats path (pipeline checkpoint runs pass the
-    shared bucket_stats aggregate) must produce exactly the same pairs as
-    the self-computed path."""
-    from cpp_near_dedupe_spark.operators.pairs import bucket_stats, capped_star_pairs
+def test_hot_buckets_shared_with_candidate_pairs(spark):
+    """candidate_pairs and the pipeline's hot-bucket lineage share one
+    detector per topology: after pair generation, hot_buckets over the
+    same bands reads the persisted relation instead of re-aggregating, and
+    all_pairs routes by exact sizes."""
+    from cpp_near_dedupe_spark.cache import release_all
+    from cpp_near_dedupe_spark.operators.pairs import hot_buckets
 
     rows = spark.range(600).select(
         F.col("id").alias("doc_id"), (F.col("id") % 3 == 0).cast("long").alias("band_key")
     )
-    stats = bucket_stats(rows, ["band_key"], "doc_id")
-    a = {(r.a, r.b) for r in capped_star_pairs(rows, ["band_key"], "doc_id", 64).collect()}
-    b = {
-        (r.a, r.b)
-        for r in capped_star_pairs(
-            rows, ["band_key"], "doc_id", 64, stats=stats
-        ).collect()
-    }
-    assert a == b and len(a) > 0
+    release_all()
+    try:
+        for topology in ("all_pairs", "chain_star"):
+            cfg = DedupeConfig(id_col="doc_id", hot_band_cap=64, pair_topology=topology)
+            assert candidate_pairs(rows, cfg).count() > 0
+            hot = hot_buckets(rows, cfg)
+            assert "InMemoryRelation" in hot._jdf.queryExecution().optimizedPlan().toString()
+            sizes = {r.band_key: r.bucket_size for r in hot.collect()}
+            assert set(sizes) == {0, 1}, topology
+            if topology == "all_pairs":
+                assert sizes == {0: 400, 1: 200}
+    finally:
+        release_all()
